@@ -144,10 +144,10 @@ def _bulk_crawl(
             stats.increment("height_span", hi - (lo or 0) + 1)
 
     if chunk_size is None:
-        silver = crawl_plan(spark, logs, blocks, blockchain=blockchain, data_version=data_version)
-        # the retry-safe sink sequence lives in ONE place — see its docstring
-        store.apply_silver(silver, data_version, blockchains=[blockchain])
-        store.set_config(blockchain, data_version, top)
+        with crawl_plan(spark, logs, blocks, blockchain=blockchain, data_version=data_version) as silver:
+            # the retry-safe sink sequence lives in ONE place — see its docstring
+            store.apply_silver(silver, data_version, blockchains=[blockchain])
+            store.set_config(blockchain, data_version, top)
         if stats is not None and top is not None:
             # span from where the bronze actually starts — high-block
             # bronze (18M+) must not report an ~18M span for a 1k-block load
@@ -170,11 +170,11 @@ def _bulk_crawl(
         hi = min(lo + chunk_size - 1, top)
         chunk_logs = logs.filter(F.col("block_number").between(lo, hi))
         chunk_blocks = blocks.filter(F.col("number").between(lo, hi))
-        silver = crawl_plan(
+        with crawl_plan(
             spark, chunk_logs, chunk_blocks, blockchain=blockchain, data_version=data_version
-        )
-        store.apply_silver(silver, data_version, blockchains=[blockchain])
-        store.set_config(blockchain, data_version, hi)  # commit BEFORE the next chunk
+        ) as silver:
+            store.apply_silver(silver, data_version, blockchains=[blockchain])
+            store.set_config(blockchain, data_version, hi)  # commit BEFORE the next chunk
         tick(lo, hi)
         done = hi
         lo = hi + 1

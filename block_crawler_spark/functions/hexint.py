@@ -17,13 +17,18 @@ equals numeric order (reference: ``core/types.py:9-122`` ``padded_hex``,
   (``nft/data_services/dynamodb.py:49-51, 224-229, 374-385``).
 
 Everything here is built-in column expressions — no Python UDFs — so the
-conversions stay inside whole-stage codegen at 100 TB scale.
+conversions stay inside whole-stage codegen at 100 TB scale.  Each helper
+composes its expression as SQL text (the ``*_sql`` builders, str → str, for
+callers that compose further) and crosses into the JVM once
+(``functions.sqlexpr``); arguments are Columns or SQL text.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .sqlexpr import sql_of
 
 # Max significant hex digits convertible exactly into Decimal(38,0) with the
 # two-chunk strategy below: high 15 hex digits * 16^16 + low 16 hex digits
@@ -38,13 +43,66 @@ VERSION_HEX_WIDTH = 40  # reference zero-pads attribute_version to 40 chars
 ZERO_ADDRESS = "0x" + "0" * 40
 
 
-def strip0x(col: Column) -> Column:
-    """Remove a leading 0x/0X prefix if present."""
-    c = F.lower(col)
-    return F.when(c.startswith("0x"), F.substring(c, 3, 0x7FFFFFFF)).otherwise(c)
+# -- SQL text builders -------------------------------------------------------
 
 
-def normalize_hex(col: Column, width: int = UINT256_HEX_WIDTH, prefix: bool = True) -> Column:
+def strip0x_sql(x: str) -> str:
+    return f"CASE WHEN startswith(lower({x}), '0x') THEN substring(lower({x}), 3) ELSE lower({x}) END"
+
+
+def normalize_hex_sql(x: str, width: int = UINT256_HEX_WIDTH, prefix: bool = True) -> str:
+    # substring(s, -width, width) keeps the rightmost `width` nibbles of an
+    # over-width string and all of a shorter one; lpad then pads it
+    body = f"lpad(substring({strip0x_sql(x)}, -{width}, {width}), {width}, '0')"
+    return f"concat('0x', {body})" if prefix else body
+
+
+def _trimmed_sql(x: str) -> str:
+    """Hex digits without prefix and leading zeros ('' for zero)."""
+    return f"trim(LEADING '0' FROM {strip0x_sql(x)})"
+
+
+def hex_sig_sql(x: str) -> str:
+    t = _trimmed_sql(x)
+    return f"CASE WHEN {t} = '' THEN '0' ELSE {t} END"
+
+
+def hex_to_dec_sql(x: str) -> str:
+    t = _trimmed_sql(x)
+    padded = f"lpad({t}, {_MAX_SIG_HEX}, '0')"
+    high = f"CAST(conv(substring({padded}, 1, 15), 16, 10) AS DECIMAL(38,0))"
+    low = f"CAST(conv(substring({padded}, 16, 16), 16, 10) AS DECIMAL(38,0))"
+    two64 = f"CAST('{_TWO_POW_64}' AS DECIMAL(38,0))"
+    return f"CASE WHEN length({t}) > {_MAX_SIG_HEX} THEN NULL ELSE {high} * {two64} + {low} END"
+
+
+def hex_to_long_sql(x: str) -> str:
+    # ≤ 16 significant digits keeps conv() inside unsigned 64 bit; try_cast
+    # then maps 2^63 … 2^64-1 to NULL; the leading '0' reads "" as zero
+    return (
+        f"CASE WHEN length({_trimmed_sql(x)}) <= 16 "
+        f"THEN try_cast(conv(concat('0', {strip0x_sql(x)}), 16, 10) AS BIGINT) END"
+    )
+
+
+def long_to_hex_sql(x: str, width: int = UINT256_HEX_WIDTH, prefix: bool = True) -> str:
+    body = f"lpad(lower(hex(CAST({x} AS BIGINT))), {width}, '0')"
+    return f"concat('0x', {body})" if prefix else body
+
+
+def topic_to_address_sql(x: str) -> str:
+    return f"concat('0x', lower(substring({x}, 27, 40)))"
+
+
+# -- Column API (one F.expr per call) ----------------------------------------
+
+
+def strip0x(col: Column | str) -> Column:
+    """Remove a leading 0x/0X prefix if present (lowercases)."""
+    return F.expr(strip0x_sql(sql_of(col)))
+
+
+def normalize_hex(col: Column | str, width: int = UINT256_HEX_WIDTH, prefix: bool = True) -> Column:
     """Canonicalize a hex string: lowercase, zero-pad to `width` nibbles, 0x prefix.
 
     Padding guarantees lexicographic order == numeric order, the engine's
@@ -56,60 +114,43 @@ def normalize_hex(col: Column, width: int = UINT256_HEX_WIDTH, prefix: bool = Tr
     zero-padded topic into all zeros and misclassifying it as the zero
     address (ADVICE r1, hexint.py:53).
     """
-    s = strip0x(col)
-    body = F.when(F.length(s) > width, F.substring(s, -width, width)).otherwise(F.lpad(s, width, "0"))
-    return F.concat(F.lit("0x"), body) if prefix else body
+    return F.expr(normalize_hex_sql(sql_of(col), width, prefix))
 
 
-def hex_sig(col: Column) -> Column:
+def hex_sig(col: Column | str) -> Column:
     """Significant (leading-zero-stripped) hex digits; '0' for zero."""
-    s = F.regexp_replace(strip0x(col), "^0+", "")
-    return F.when(s == "", F.lit("0")).otherwise(s)
+    return F.expr(hex_sig_sql(sql_of(col)))
 
 
-def hex_to_dec(col: Column) -> Column:
+def hex_to_dec(col: Column | str) -> Column:
     """Hex string (any casing, optional 0x) → Decimal(38,0); NULL on overflow.
 
     Exact up to 31 significant hex digits (~1.7e37) via a two-chunk
     high*2^64 + low decomposition; conv() alone is only safe to 15 digits
     because it saturates at unsigned 64-bit.
     """
-    sig = hex_sig(col)
-    n = F.length(sig)
-    low16 = F.substring(F.lpad(sig, _MAX_SIG_HEX, "0"), _MAX_SIG_HEX - 15, 16)
-    high15 = F.substring(F.lpad(sig, _MAX_SIG_HEX, "0"), 1, 15)
-    low_d = F.conv(low16, 16, 10).cast("decimal(38,0)")
-    high_d = F.conv(high15, 16, 10).cast("decimal(38,0)")
-    combined = high_d * F.lit(_TWO_POW_64).cast("decimal(38,0)") + low_d
-    return (
-        F.when(col.isNull(), F.lit(None).cast("decimal(38,0)"))
-        .when(n > _MAX_SIG_HEX, F.lit(None).cast("decimal(38,0)"))
-        .otherwise(combined)
-    )
+    return F.expr(hex_to_dec_sql(sql_of(col)))
 
 
-def hex_to_long(col: Column) -> Column:
+def hex_to_long(col: Column | str) -> Column:
     """Hex string → LongType; NULL if it exceeds 63 bits (15 full hex digits + sign headroom)."""
-    sig = hex_sig(col)
-    ok = (F.length(sig) < 16) | ((F.length(sig) == 16) & (F.substring(sig, 1, 1) < F.lit("8")))
-    return F.when(ok, F.conv(sig, 16, 10).cast("long")).otherwise(F.lit(None).cast("long"))
+    return F.expr(hex_to_long_sql(sql_of(col)))
 
 
-def long_to_hex(col: Column, width: int = UINT256_HEX_WIDTH, prefix: bool = True) -> Column:
+def long_to_hex(col: Column | str, width: int = UINT256_HEX_WIDTH, prefix: bool = True) -> Column:
     """Non-negative integral column → canonical zero-padded lowercase hex."""
-    body = F.lpad(F.lower(F.hex(col.cast("long"))), width, "0")
-    return F.concat(F.lit("0x"), body) if prefix else body
+    return F.expr(long_to_hex_sql(sql_of(col), width, prefix))
 
 
-def hex_add(a: Column, b: Column) -> Column:
+def hex_add(a: Column | str, b: Column | str) -> Column:
     """Add two canonical hex columns via Decimal; NULL on overflow (reference clamps too)."""
-    return hex_to_dec(a) + hex_to_dec(b)
+    return F.expr(f"({hex_to_dec_sql(sql_of(a))}) + ({hex_to_dec_sql(sql_of(b))})")
 
 
-def is_zero_address(col: Column) -> Column:
-    return normalize_hex(col, ADDRESS_HEX_WIDTH) == F.lit(ZERO_ADDRESS)
+def is_zero_address(col: Column | str) -> Column:
+    return F.expr(f"{normalize_hex_sql(sql_of(col), ADDRESS_HEX_WIDTH)} = '{ZERO_ADDRESS}'")
 
 
-def topic_to_address(col: Column) -> Column:
+def topic_to_address(col: Column | str) -> Column:
     """32-byte topic hex ("0x"+64) → address ("0x"+40): the low 20 bytes."""
-    return F.concat(F.lit("0x"), F.lower(F.substring(col, 27, 40)))
+    return F.expr(topic_to_address_sql(sql_of(col)))

@@ -12,24 +12,28 @@ Reference behavior being re-expressed (``nft/evm/transformers.py``):
 * ERC-1155 ``URI``: data = (string uri); literal ``{id}`` substituted with
   the decimal token id (``:339-376``).
 
-Everything is a single declarative DataFrame expression: filters push to the
-parquet scan, the four event families are carved out of one cached logs scan,
-and the batch case uses ``arrays_zip``+``explode`` rather than a per-row loop.
+Each event family is one filter (pushed to the parquet scan) plus two
+``select`` steps — the decoded fields, then the fields derived from them —
+whose columns are SQL text composed by the ``*_sql`` builders: one JVM call
+per output column, and one plan analysis per DataFrame step instead of one
+per ``withColumn``.  The batch case adds an ``arrays_zip``+``posexplode``
+step rather than a per-row loop; the URI family is one filter plus one
+select.  Nothing is cached here; the callers that reuse a decode
+(``plans.crawl``) cache it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.abi import decode_string, decode_uint256_array, word
+from ..functions.abi import decode_string_sql, decode_uint256_array_sql, word_sql
 from ..functions.hexint import (
     UINT256_HEX_WIDTH,
-    hex_to_dec,
-    normalize_hex,
-    topic_to_address,
+    hex_to_dec_sql,
+    normalize_hex_sql,
+    topic_to_address_sql,
 )
-from ..operators.oracles import attribute_version, attribute_version_hex
+from ..operators.oracles import attribute_version_hex_sql, attribute_version_sql, transaction_type_sql
 from ..schemas import (
     ERC721_TRANSFER_TOPIC,
     ERC1155_TRANSFER_BATCH_TOPIC,
@@ -41,59 +45,102 @@ from ..schemas import (
 
 _ONE_HEX = "0x" + "1".rjust(UINT256_HEX_WIDTH, "0")
 
-# Topic access uses getItem (GetArrayItem) rather than element_at: Catalyst's
-# SimplifyExtractValueOps collapses GetArrayItem(CreateArray(...), literal)
-# to the single element, so synthetic/constructed topic arrays (tests, the
-# nft_ops oracle queries) don't inline the whole array expression at every
-# use site — with element_at the duplicated expression tree blew past the
-# janino 64KB method limit and silently disabled whole-stage codegen
+# Topic access is ``topics[i]`` (GetArrayItem) rather than element_at:
+# Catalyst's SimplifyExtractValueOps collapses GetArrayItem(CreateArray(...),
+# literal) to the single element, so synthetic/constructed topic arrays
+# (tests, the nft_ops oracle queries) don't inline the whole array expression
+# at every use site — with element_at the duplicated expression tree blew
+# past the janino 64KB method limit and silently disabled whole-stage codegen
 # (~6× slower end-to-end at sf0.1).
 
 
-def _topic(i: int):
+def _topic(i: int) -> str:
     """1-based topic accessor."""
-    return F.col("topics").getItem(i - 1)
+    return f"topics[{i - 1}]"
 
 
-def _topic0(df: DataFrame):
-    return _topic(1)
+def _family_filter(topic: str, n_topics: int) -> str:
+    return f"size(topics) = {n_topics} AND {_topic(1)} = '{topic}'"
 
 
-def _base_cols(df: DataFrame) -> DataFrame:
-    """Provenance + ordering columns shared by every decoded event."""
-    return df.withColumn(
+_VERSION = attribute_version_sql("block_number", "transaction_index", "log_index")
+
+
+def _transfer_row(
+    df: DataFrame,
+    spec: str,
+    from_topic: int,
+    to_topic: int,
+    token: str,
+    quantity_hex: str,
+    batch_index: str = "0",
+) -> DataFrame:
+    """The finished transfer row (reference T8–T10): one ``select`` of the
+    decoded fields, one of the fields derived from them — the same two
+    projections whole-stage codegen has always fused, so ``from_``/``to_``
+    are computed once per row, not once per use in the classification.
+
+    Ingest contract: ``address`` and the decoded from_/to_ are canonical
+    lowercase "0x"+40 hex (topic_to_address lowers; sources lower addresses
+    on ingest, reference normalizes at the CLI, ``core/click.py:58-66``), so
+    the mint/burn classification compares them directly instead of routing
+    through ``classify_transfer``'s re-normalization — keeps the generated
+    code comfortably inside whole-stage codegen limits.
+    """
+    return df.selectExpr(
+        "lower(address) AS collection_id",
+        f"'{spec}' AS specification",
+        "block_number",
+        "transaction_index",
+        "log_index",
+        "transaction_hash",
+        f"{_VERSION} AS attribute_version",
+        f"{topic_to_address_sql(_topic(from_topic))} AS from_",
+        f"{topic_to_address_sql(_topic(to_topic))} AS to_",
+        f"{token} AS token_id_hex",
+        f"{quantity_hex} AS quantity_hex",
+        f"{batch_index} AS batch_index",
+    ).selectExpr(
+        "collection_id",
+        "specification",
+        "block_number",
+        "transaction_index",
+        "log_index",
+        "transaction_hash",
         "attribute_version",
-        attribute_version(F.col("block_number"), F.col("transaction_index"), F.col("log_index")),
-    ).withColumn(
-        "attribute_version_hex",
-        attribute_version_hex(F.col("block_number"), F.col("transaction_index"), F.col("log_index")),
+        "lpad(lower(hex(attribute_version)), 40, '0') AS attribute_version_hex",
+        "from_",
+        "to_",
+        "token_id_hex",
+        "quantity_hex",
+        f"{hex_to_dec_sql('quantity_hex')} AS quantity",
+        f"{transaction_type_sql('from_', 'to_', 'collection_id')} AS transaction_type",
+        "batch_index",
     )
 
 
 def decode_erc721_transfers(logs: DataFrame) -> DataFrame:
     """ERC-721 Transfer logs → one transfer row each (reference T8)."""
-    out = (
-        logs.filter((F.size("topics") == 4) & (_topic0(logs) == F.lit(ERC721_TRANSFER_TOPIC)))
-        .withColumn("from_", topic_to_address(_topic(2)))
-        .withColumn("to_", topic_to_address(_topic(3)))
-        .withColumn("token_id_hex", normalize_hex(_topic(4)))
-        .withColumn("quantity_hex", F.lit(_ONE_HEX))
-        .withColumn("specification", F.lit(SPEC_ERC721))
+    return _transfer_row(
+        logs.filter(_family_filter(ERC721_TRANSFER_TOPIC, 4)),
+        SPEC_ERC721,
+        2,
+        3,
+        normalize_hex_sql(_topic(4)),
+        f"'{_ONE_HEX}'",
     )
-    return _finish_transfer(out)
 
 
 def decode_erc1155_single_transfers(logs: DataFrame) -> DataFrame:
     """ERC-1155 TransferSingle logs → one transfer row each (reference T9)."""
-    out = (
-        logs.filter((F.size("topics") == 4) & (_topic0(logs) == F.lit(ERC1155_TRANSFER_SINGLE_TOPIC)))
-        .withColumn("from_", topic_to_address(_topic(3)))
-        .withColumn("to_", topic_to_address(_topic(4)))
-        .withColumn("token_id_hex", normalize_hex(word(F.col("data"), 0)))
-        .withColumn("quantity_hex", normalize_hex(word(F.col("data"), 1)))
-        .withColumn("specification", F.lit(SPEC_ERC1155))
+    return _transfer_row(
+        logs.filter(_family_filter(ERC1155_TRANSFER_SINGLE_TOPIC, 4)),
+        SPEC_ERC1155,
+        3,
+        4,
+        normalize_hex_sql(word_sql("data", 0)),
+        normalize_hex_sql(word_sql("data", 1)),
     )
-    return _finish_transfer(out)
 
 
 def decode_erc1155_batch_transfers(logs: DataFrame) -> DataFrame:
@@ -107,74 +154,34 @@ def decode_erc1155_batch_transfers(logs: DataFrame) -> DataFrame:
     reconciliation key (which adds token_id for 1155 batch items,
     ``verify.py:810-817``).
     """
-    out = (
-        logs.filter((F.size("topics") == 4) & (_topic0(logs) == F.lit(ERC1155_TRANSFER_BATCH_TOPIC)))
-        .withColumn("from_", topic_to_address(_topic(3)))
-        .withColumn("to_", topic_to_address(_topic(4)))
-        .withColumn("ids", decode_uint256_array(F.col("data"), 0))
-        .withColumn("values", decode_uint256_array(F.col("data"), 1))
-        .select(
-            "*",
-            F.posexplode(F.arrays_zip(F.col("ids"), F.col("values"))).alias("batch_index", "pair"),
-        )
-        .withColumn("token_id_hex", normalize_hex(F.col("pair.ids")))
-        .withColumn("quantity_hex", normalize_hex(F.col("pair.values")))
-        .withColumn("specification", F.lit(SPEC_ERC1155))
-        .drop("ids", "values", "pair")
-    )
-    return _finish_transfer(out)
-
-
-def _finish_transfer(df: DataFrame) -> DataFrame:
-    """Shared tail: provenance, version oracle, quantity decode, type oracle.
-
-    Ingest contract: ``address`` and the decoded from_/to_ are canonical
-    lowercase "0x"+40 hex (topic_to_address lowers; sources lower addresses
-    on ingest, reference normalizes at the CLI, ``core/click.py:58-66``), so
-    the mint/burn classification compares them directly instead of routing
-    through ``classify_transfer``'s re-normalization — keeps the generated
-    code comfortably inside whole-stage codegen limits.
-    """
-    df = _base_cols(df)
-    zero = F.lit("0x" + "0" * 40)
-    coll = F.lower(F.col("address"))
-    tx_type = (
-        F.when(F.col("to_") == zero, F.lit("burn"))
-        .when(((F.col("from_") == zero) | (F.col("from_") == coll)) & (F.col("to_") != coll), F.lit("mint"))
-        .otherwise(F.lit("transfer"))
-    )
-    cols = [
-        coll.alias("collection_id"),
-        "specification",
+    ids, values = decode_uint256_array_sql("data", 0), decode_uint256_array_sql("data", 1)
+    exploded = logs.filter(_family_filter(ERC1155_TRANSFER_BATCH_TOPIC, 4)).selectExpr(
+        "address",
         "block_number",
         "transaction_index",
         "log_index",
         "transaction_hash",
-        "attribute_version",
-        "attribute_version_hex",
-        "from_",
-        "to_",
-        "token_id_hex",
-        "quantity_hex",
-        hex_to_dec(F.col("quantity_hex")).alias("quantity"),
-        tx_type.alias("transaction_type"),
-    ]
-    if "batch_index" in df.columns:
-        cols.append("batch_index")
-    else:
-        cols.append(F.lit(0).alias("batch_index"))
-    return df.select(*cols)
+        "topics",
+        f"posexplode(arrays_zip({ids}, {values})) AS (batch_index, pair)",
+    )
+    return _transfer_row(
+        exploded,
+        SPEC_ERC1155,
+        3,
+        4,
+        normalize_hex_sql("pair.`0`"),
+        normalize_hex_sql("pair.`1`"),
+        "batch_index",
+    )
 
 
-def _drop_removed(logs: DataFrame) -> DataFrame:
+def _not_removed(logs: DataFrame) -> str | None:
     """Reorg guard: a websocket subscription can redeliver a log with
     ``removed=true`` when its block is orphaned — such logs must never
     reach the folds.  Batch ``eth_getLogs`` over canonical history always
     carries ``removed=false``, so this predicate prunes nothing there (and
-    pushes to the scan).  Tolerates frames without the column."""
-    if "removed" in logs.columns:
-        return logs.filter(~F.coalesce(F.col("removed"), F.lit(False)))
-    return logs
+    pushes to the scan).  Tolerates frames without the column (None)."""
+    return "NOT coalesce(removed, false)" if "removed" in logs.columns else None
 
 
 def decode_token_transfers(logs: DataFrame) -> DataFrame:
@@ -184,7 +191,9 @@ def decode_token_transfers(logs: DataFrame) -> DataFrame:
     parquet scan) — the three branches share identical pushed filters on
     ``topics`` size so Catalyst prunes non-transfer rows early.
     """
-    logs = _drop_removed(logs)
+    guard = _not_removed(logs)
+    if guard is not None:
+        logs = logs.filter(guard)
     return (
         decode_erc721_transfers(logs)
         .unionByName(decode_erc1155_single_transfers(logs))
@@ -200,28 +209,21 @@ def decode_uri_updates(logs: DataFrame) -> DataFrame:
     Decimal(38,0) the substitution is skipped (URI kept verbatim) in line
     with the engine-wide clamp-to-null policy.
     """
-    logs = _drop_removed(logs)
-    out = (
-        logs.filter((F.size("topics") == 2) & (_topic0(logs) == F.lit(ERC1155_URI_TOPIC)))
-        .withColumn("token_id_hex", normalize_hex(F.element_at("topics", 2)))
-        .withColumn("uri_raw", decode_string(F.col("data"), 0))
-        .withColumn("token_id_dec", hex_to_dec(F.col("token_id_hex")).cast("string"))
-        .withColumn(
-            "metadata_url",
-            F.when(
-                F.col("token_id_dec").isNotNull(),
-                F.regexp_replace(F.col("uri_raw"), r"\{id\}", F.col("token_id_dec")),
-            ).otherwise(F.col("uri_raw")),
-        )
-    )
-    out = _base_cols(out)
-    return out.select(
-        F.col("address").alias("collection_id"),
+    cond = _family_filter(ERC1155_URI_TOPIC, 2)
+    guard = _not_removed(logs)
+    if guard is not None:
+        cond = f"{guard} AND {cond}"
+    token = normalize_hex_sql(_topic(2))
+    uri = decode_string_sql("data", 0)
+    token_dec = f"CAST({hex_to_dec_sql(token)} AS STRING)"
+    return logs.filter(cond).selectExpr(
+        "address AS collection_id",
         "block_number",
         "transaction_index",
         "log_index",
-        "attribute_version",
-        "attribute_version_hex",
-        "token_id_hex",
-        "metadata_url",
+        f"{_VERSION} AS attribute_version",
+        f"{attribute_version_hex_sql('block_number', 'transaction_index', 'log_index')} AS attribute_version_hex",
+        f"{token} AS token_id_hex",
+        # an id that overflowed to NULL replaces '{id}' by itself
+        f"replace({uri}, '{{id}}', coalesce({token_dec}, '{{id}}')) AS metadata_url",
     )

@@ -26,11 +26,11 @@ from ..functions.hexint import ZERO_ADDRESS
 from ..schemas import SPEC_ERC721, TX_BURN, TX_MINT, TX_TRANSFER
 
 
-def _null_if_any_overflow(sum_expr, qty_col="quantity"):
-    """Engine-wide clamp policy: if any contributing quantity overflowed to
-    NULL, the aggregate is NULL (plain SQL sum would silently skip it)."""
-    any_null = F.max(F.col(qty_col).isNull().cast("int")) == 1
-    return F.when(any_null, F.lit(None).cast("decimal(38,0)")).otherwise(sum_expr)
+def _sum_or_null(col: str):
+    """``quantity`` = sum of ``col`` under the engine-wide clamp policy: if
+    any contributing quantity overflowed to NULL, the aggregate is NULL
+    (plain SQL sum would silently skip it)."""
+    return F.expr(f"CASE WHEN max(CAST({col} IS NULL AS INT)) = 1 THEN NULL ELSE sum({col}) END AS quantity")
 
 
 def _grouped_by_token(t: DataFrame, *keys: str):
@@ -79,7 +79,7 @@ def fold_token_state(transfers: DataFrame, uri_updates: DataFrame | None = None)
 
     folded = _grouped_by_token(t, "blockchain", "collection_id", "token_id_hex").agg(
         F.first("specification").alias("specification"),
-        _null_if_any_overflow(F.sum("_signed"), "_signed").alias("quantity"),
+        _sum_or_null("_signed"),
         F.min_by(F.when(is_mint, F.col("to_")), F.when(is_mint, F.col("attribute_version"))).alias("original_owner"),
         F.min(F.when(is_mint, F.col("block_number"))).alias("mint_block"),
         F.min(F.when(is_mint, F.col("timestamp"))).alias("mint_timestamp")
@@ -149,22 +149,18 @@ def _signed_delta_rows(t: DataFrame) -> DataFrame:
     additionally dropped defensively.  The reference builds the same ± pairs
     in its incremental consumers (``nft/consumers.py:162-172``).
     """
-    zero = F.lit(ZERO_ADDRESS)
-    is_mint = F.col("transaction_type") == TX_MINT
-    is_burn = F.col("transaction_type") == TX_BURN
-    plus = F.struct(F.col("to_").alias("account"), F.col("quantity").alias("delta"))
-    minus = F.struct(F.col("from_").alias("account"), (-F.col("quantity")).alias("delta"))
+    plus = "named_struct('account', to_, 'delta', quantity)"
+    minus = "named_struct('account', from_, 'delta', -quantity)"
     sides = (
-        F.when(is_mint, F.array(plus))
-        .when(is_burn, F.array(minus))
-        .otherwise(F.array(plus, minus))
+        f"CASE transaction_type WHEN '{TX_MINT}' THEN array({plus}) "
+        f"WHEN '{TX_BURN}' THEN array({minus}) ELSE array({plus}, {minus}) END"
     )
-    return t.select(
+    return t.selectExpr(
         "blockchain",
         "collection_id",
         "token_id_hex",
-        F.explode(F.filter(sides, lambda s: s["account"] != zero)).alias("d"),
-    ).select("blockchain", "collection_id", "token_id_hex", "d.account", "d.delta")
+        f"inline(filter({sides}, side_ -> side_.account != '{ZERO_ADDRESS}'))",
+    )
 
 
 def fold_erc1155_balances(transfers: DataFrame) -> DataFrame:
@@ -174,7 +170,7 @@ def fold_erc1155_balances(transfers: DataFrame) -> DataFrame:
     """
     deltas = _signed_delta_rows(transfers.filter(F.col("specification") != SPEC_ERC721))
     balances = _grouped_by_token(deltas, "blockchain", "collection_id", "token_id_hex", "account").agg(
-        _null_if_any_overflow(F.sum("delta"), "delta").alias("quantity")
+        _sum_or_null("delta")
     )
     return balances.filter(F.col("quantity").isNull() | (F.col("quantity") != 0)).select(
         "blockchain", "account", "collection_id", "token_id_hex", "quantity"
@@ -197,9 +193,8 @@ def fold_owner_deltas(transfers: DataFrame) -> DataFrame:
     engine's core incremental invariant.
     """
     deltas = _signed_delta_rows(transfers)
-    any_null = F.max(F.col("delta").isNull().cast("int")) == 1
     return _grouped_by_token(deltas, "blockchain", "account", "collection_id", "token_id_hex").agg(
-        F.when(any_null, F.lit(None).cast("decimal(38,0)")).otherwise(F.sum("delta")).alias("quantity")
+        _sum_or_null("delta")
     ).drop("_gh")
 
 
@@ -224,66 +219,131 @@ def owner_balances_from_silver(transfers_silver: DataFrame, touched_keys: DataFr
     a tail mid-chain without backfilling transfers under-counts, exactly as
     the delta path did.
     """
-    from ..functions.hexint import hex_to_dec
+    from ..functions.hexint import hex_to_dec_sql
 
     t = transfers_silver
     if touched_keys is not None:
         t = t.join(touched_keys, ["blockchain", "collection_id", "token_id_hex"], "left_semi")
-    t = t.withColumn("quantity", hex_to_dec(F.col("quantity_hex")))
-    deltas = _signed_delta_rows(t)
-    balances = _grouped_by_token(deltas, "blockchain", "collection_id", "token_id_hex", "account").agg(
-        _null_if_any_overflow(F.sum("delta"), "delta").alias("quantity")
+    deltas = _signed_delta_rows(
+        t.selectExpr(
+            "blockchain",
+            "collection_id",
+            "token_id_hex",
+            "transaction_type",
+            "from_",
+            "to_",
+            f"{hex_to_dec_sql('quantity_hex')} AS quantity",
+        )
     )
-    return balances.filter(F.col("quantity").isNull() | (F.col("quantity") != 0)).select(
+    balances = _grouped_by_token(deltas, "blockchain", "collection_id", "token_id_hex", "account").agg(
+        _sum_or_null("delta")
+    )
+    return balances.filter("quantity IS NULL OR quantity != 0").select(
         "blockchain", "account", "collection_id", "token_id_hex", "quantity"
     )
 
 
 def token_state_from_silver(
-    transfers_silver: DataFrame, touched_keys: DataFrame | None = None
+    transfers_silver: DataFrame, meta: DataFrame, touched_keys: DataFrame | None = None
 ) -> DataFrame:
-    """Recompute the transfer-derived token-state fields (A1) from the
-    IDEMPOTENT silver ``token_transfers`` table — the retry-safe tokens
-    path, exactly parallel to :func:`owner_balances_from_silver`.
+    """Recompute token rows (A1) from the IDEMPOTENT silver
+    ``token_transfers`` table — the retry-safe tokens path, exactly
+    parallel to :func:`owner_balances_from_silver`.
 
     The additive ``quantity`` merge in ``token_state_merge`` double-counts
     when the same block range is applied twice (a crashed-and-retried
     batch, or a bulk crawl re-run over the same bronze).  Recomputing from
     the deduped transfers table makes the tokens write a pure function of
-    committed history.  Only fields derivable from transfers are produced;
-    ``specification``/``metadata_url``/``data_version`` are merged
-    separately (``SilverStore.rebuild_tokens``) because they come from
-    probes and URI events, not the transfer stream.
+    committed history.  ``specification``/``metadata_url``/``data_version``
+    are not functions of the transfer stream (they come from probes and URI
+    events): ``meta`` carries them — rows of ``blockchain, collection_id,
+    token_id_hex, specification, metadata_url, metadata_url_version_hex,
+    data_version``, any number per key (``SilverStore.rebuild_tokens``
+    passes the stored rows plus the batch's).  Transfer rows and meta rows
+    are folded by ONE group-by — one shuffle, no join — and a key with no
+    transfer yields no row.
+
+    Meta fields: ``specification`` is the max (an ERC-165 probe result,
+    constant per token); the ``metadata_url`` pair is K3 LWW on
+    ``(data_version, metadata_url_version_hex)`` (merge.metadata_url_upsert)
+    where only rows that CARRY URI data compete — a NULL ordering key makes
+    max_by skip the row, so a higher-data_version batch with no URI event
+    can never clobber an existing metadata_url to NULL (round-4 review
+    finding).  "Carries URI data" means EITHER field: the A4 backfill
+    (fetch_token_uris) sets a URL with no version hex, and such a row must
+    still compete (with an empty version) rather than be silently dropped.
 
     The silver table's 40-char zero-padded ``attribute_version_hex`` is the
     ordering key directly — lexicographic == numeric by construction
     (``oracles.attribute_version_hex``), so no hex→decimal round trip.
     """
-    from ..functions.hexint import hex_to_dec
+    from ..functions.hexint import hex_to_dec_sql
 
+    keys = ["blockchain", "collection_id", "token_id_hex"]
     t = transfers_silver
     if touched_keys is not None:
-        t = t.join(touched_keys, ["blockchain", "collection_id", "token_id_hex"], "left_semi")
-    is_mint = F.col("transaction_type") == TX_MINT
-    is_burn = F.col("transaction_type") == TX_BURN
-    own_event = F.col("transaction_type").isin(TX_MINT, TX_TRANSFER)
-    qty = hex_to_dec(F.col("quantity_hex"))
-    t = t.withColumn(
-        "_signed",
-        F.when(is_mint, qty).when(is_burn, -qty).otherwise(F.lit(0).cast("decimal(38,0)")),
+        t = t.join(touched_keys, keys, "left_semi")
+    qty = hex_to_dec_sql("quantity_hex")
+    rows = t.selectExpr(
+        *keys,
+        "transaction_type",
+        "to_",
+        "attribute_version_hex",
+        "block_id",
+        "timestamp",
+        f"CASE transaction_type WHEN '{TX_MINT}' THEN {qty} WHEN '{TX_BURN}' THEN -({qty}) "
+        "ELSE CAST(0 AS DECIMAL(38,0)) END AS _signed",
+    ).unionByName(
+        meta.selectExpr(
+            *keys,
+            "specification",
+            "metadata_url",
+            "metadata_url_version_hex",
+            "data_version",
+            "CAST(0 AS DECIMAL(38,0)) AS _signed",
+        ),
+        allowMissingColumns=True,
     )
-    return _grouped_by_token(t, "blockchain", "collection_id", "token_id_hex").agg(
-        _null_if_any_overflow(F.sum("_signed"), "_signed").alias("quantity"),
-        F.min_by(F.when(is_mint, F.col("to_")), F.when(is_mint, F.col("attribute_version_hex"))).alias(
-            "original_owner"
+    mint = f"transaction_type = '{TX_MINT}'"
+    own = f"transaction_type IN ('{TX_MINT}', '{TX_TRANSFER}')"
+    erc721 = f"specification = '{SPEC_ERC721}'"
+    carries_uri = "metadata_url IS NOT NULL OR metadata_url_version_hex IS NOT NULL"
+    folded = _grouped_by_token(rows, *keys).agg(
+        # the meta rows' _signed is 0, so only a transfer's overflowed
+        # quantity can NULL the sum
+        _sum_or_null("_signed"),
+        F.expr(
+            f"min_by(CASE WHEN {mint} THEN to_ END, CASE WHEN {mint} THEN attribute_version_hex END)"
+            " AS original_owner"
         ),
-        F.min(F.when(is_mint, F.col("block_id"))).alias("mint_block"),
-        F.min(F.when(is_mint, F.col("timestamp"))).alias("mint_timestamp"),
-        F.max_by(F.when(own_event, F.col("to_")), F.when(own_event, F.col("attribute_version_hex"))).alias(
-            "_last_recipient"
+        F.expr(f"min(CASE WHEN {mint} THEN block_id END) AS mint_block"),
+        F.expr(f"min(CASE WHEN {mint} THEN timestamp END) AS mint_timestamp"),
+        F.expr(
+            f"max_by(CASE WHEN {own} THEN to_ END, CASE WHEN {own} THEN attribute_version_hex END)"
+            " AS _last_recipient"
         ),
-        F.max(F.when(own_event, F.col("attribute_version_hex"))).alias("_owner_version_hex"),
-    ).drop("_gh")
+        F.expr(f"max(CASE WHEN {own} THEN attribute_version_hex END) AS _owner_version_hex"),
+        F.expr("max(specification) AS specification"),
+        F.expr(
+            "max_by(struct(metadata_url, metadata_url_version_hex), "
+            f"CASE WHEN {carries_uri} THEN struct(data_version, coalesce(metadata_url_version_hex, '')) END) AS _meta"
+        ),
+        F.expr("max(data_version) AS data_version"),
+        F.expr("count(transaction_type) AS _transfers"),
+    )
+    return folded.filter("_transfers > 0").selectExpr(
+        *keys,
+        "mint_block",
+        "mint_timestamp",
+        "original_owner",
+        f"CASE WHEN {erc721} THEN _last_recipient END AS current_owner",
+        f"CASE WHEN {erc721} THEN _owner_version_hex END AS current_owner_version_hex",
+        "quantity",
+        "_meta.metadata_url AS metadata_url",
+        "_meta.metadata_url_version_hex AS metadata_url_version_hex",
+        "data_version",
+        "specification",
+    )
 
 
 def transfers_to_silver(transfers: DataFrame, data_version: int, blockchain: str | None = None) -> DataFrame:

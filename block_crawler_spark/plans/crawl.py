@@ -24,11 +24,13 @@ Scale notes (100 TB target):
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hexint import hex_to_dec
+from ..functions.sqlexpr import sql_str
 from ..operators.decode import decode_token_transfers, decode_uri_updates
 from ..operators.folds import (
     fold_owner_deltas,
@@ -41,11 +43,48 @@ from ..schemas import SPEC_ERC721, SPEC_ERC1155
 
 @dataclass
 class SilverTables:
+    """One crawl batch's silver frames.
+
+    ``token_transfers`` and ``token_meta`` are what
+    ``SilverStore.apply_silver`` consumes, built by :func:`crawl_plan`; the
+    snapshot folds (``tokens``, ``owners``, ``owner_deltas``) are built on
+    first access — the bulk callers (CLI, tests) read them, the tail path
+    never does.  ``transfers`` (the decoded batch) is cached while the batch
+    is applied; use the object as a context manager, or call
+    :meth:`release`, to drop the cache once the batch has committed.
+    """
+
     collections: DataFrame
-    tokens: DataFrame
     token_transfers: DataFrame
-    owners: DataFrame  # snapshot fold (A2 ∪ A3) — bulk/load path
-    owner_deltas: DataFrame  # ± incremental fold (A5) — tail path
+    # specification and URI rows per token key of the batch — the fields of
+    # a token that are not functions of the transfer history
+    token_meta: DataFrame
+    transfers: DataFrame
+    uris: DataFrame
+    data_version: int
+
+    @cached_property
+    def tokens(self) -> DataFrame:
+        return fold_token_state(self.transfers, self.uris).withColumn("data_version", F.lit(self.data_version))
+
+    @cached_property
+    def owners(self) -> DataFrame:
+        """Snapshot fold (A2 ∪ A3) — bulk/load path."""
+        return fold_owners(self.transfers).withColumn("data_version", F.lit(self.data_version))
+
+    @cached_property
+    def owner_deltas(self) -> DataFrame:
+        """± incremental fold (A5)."""
+        return fold_owner_deltas(self.transfers)
+
+    def release(self) -> None:
+        self.transfers.unpersist()
+
+    def __enter__(self) -> "SilverTables":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
 
 
 def derive_collections(
@@ -113,9 +152,10 @@ def crawl_plan(
     blockchain: str = "ethereum-mainnet",
     data_version: int = 1,
 ) -> SilverTables:
-    """Full one-pass plan: logs (+blocks) → transfers, tokens, owners
-    (+ collections when receipts/contracts provided)."""
-    block_times = blocks.select(F.col("number").alias("block_number"), F.col("timestamp"))
+    """Full one-pass plan: logs (+blocks) → transfers, token metadata
+    (+ collections when receipts/contracts provided); the folds are lazy
+    (see :class:`SilverTables`)."""
+    block_times = blocks.selectExpr("number AS block_number", "timestamp")
 
     transfers = (
         decode_token_transfers(logs)
@@ -137,14 +177,35 @@ def crawl_plan(
 
     transfers = transfers.cache()
 
-    tokens = fold_token_state(transfers, uris).withColumn("data_version", F.lit(data_version))
-    owners = fold_owners(transfers).withColumn("data_version", F.lit(data_version))
-    owner_deltas = fold_owner_deltas(transfers)
+    # SilverStore.rebuild_tokens folds these per key with the stored rows:
+    # specification from any transfer, the URI with the highest version
+    no_text = "CAST(NULL AS STRING)"
+    token_meta = transfers.selectExpr(
+        "blockchain",
+        "collection_id",
+        "token_id_hex",
+        "specification",
+        f"{no_text} AS metadata_url",
+        f"{no_text} AS metadata_url_version_hex",
+        f"{int(data_version)} AS data_version",
+    ).unionByName(
+        uris.selectExpr(
+            f"{sql_str(blockchain)} AS blockchain",
+            "collection_id",
+            "token_id_hex",
+            f"{no_text} AS specification",
+            "metadata_url",
+            "attribute_version_hex AS metadata_url_version_hex",
+            f"{int(data_version)} AS data_version",
+        )
+    )
     token_transfers = transfers_to_silver(transfers, data_version)
 
     if collections is None:
-        collections = spark.createDataFrame([], "blockchain string, collection_id string")
-    return SilverTables(collections, tokens, token_transfers, owners, owner_deltas)
+        collections = spark.sql(
+            "SELECT CAST(NULL AS STRING) AS blockchain, CAST(NULL AS STRING) AS collection_id LIMIT 0"
+        )
+    return SilverTables(collections, token_transfers, token_meta, transfers, uris, data_version)
 
 
 def total_supply_check(collections: DataFrame, tokens: DataFrame) -> DataFrame:
@@ -152,7 +213,7 @@ def total_supply_check(collections: DataFrame, tokens: DataFrame) -> DataFrame:
     counts = tokens.groupBy("blockchain", "collection_id").agg(F.count("*").alias("token_count"))
     return (
         collections.select(
-            "blockchain", "collection_id", hex_to_dec(F.col("total_supply_hex")).alias("total_supply")
+            "blockchain", "collection_id", hex_to_dec("total_supply_hex").alias("total_supply")
         )
         .join(counts, ["blockchain", "collection_id"], "left")
         .withColumn("token_count", F.coalesce("token_count", F.lit(0)))

@@ -38,6 +38,20 @@ prune via :meth:`_read_for_merge` only when the same layout probe says the
 write will prune too.  Steady-state tail cost is therefore O(touched
 collection buckets) for reads AND writes.
 
+Per-batch materialization (:meth:`apply_silver`): the batch's touched
+token keys are derived ONCE and cached — the touched-buckets collect
+materializes them, and the token and owner rebuilds' semi-joins (history to
+recompute) and anti-joins (rows kept as they are) read that copy instead of
+re-running a distinct over the batch — then unpersisted before the call
+returns.  The decoded batch itself is cached by ``plans.crawl`` and
+released by the caller once the batch has committed (``SilverTables`` is a
+context manager).  The token rebuild takes a narrow metadata frame
+(specification and URI rows per key) rather than a folded token table, and
+folds it with the committed transfers in one group-by.  A table with no
+committed version reads as an empty local relation, so Catalyst prunes
+every merge against it (a fresh store's first load plans no existing-side
+scan), and :meth:`get_config` answers a fresh store without a Spark job.
+
 Durability (round-2, ADVICE r1 store.py:67): each rewrite lands in a fresh
 ``v-N`` directory under the table path, then a one-line ``_CURRENT`` pointer
 file is flipped via ``os.replace`` (atomic on POSIX).  A crash or executor
@@ -61,6 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from ..functions.sqlexpr import sql_str
 from ..operators import merge as M
 from ..schemas import (
     COLLECTION_SCHEMA,
@@ -92,6 +107,12 @@ KEYS = {
 _BUCKETED = frozenset({"tokens", "token_transfers", "owners"})
 
 
+def _in_sql(col: str, values: list[str]) -> str:
+    """``col IN (values)`` as SQL text (FALSE for no values): one JVM call
+    per filter, however many values."""
+    return f"{col} IN ({', '.join(values)})" if values else "FALSE"
+
+
 @dataclass
 class SilverStore:
     spark: SparkSession
@@ -101,12 +122,13 @@ class SilverStore:
     def _path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def _bucket_expr(self):
+    def _bucket_sql(self) -> str:
         """The collection-bucket partition value — a pure function of
         collection_id, so rows re-bucket identically on every rewrite."""
-        return F.pmod(
-            F.xxhash64(F.coalesce(F.col("collection_id"), F.lit(""))), F.lit(self.n_buckets)
-        ).cast("int")
+        return f"CAST(pmod(xxhash64(coalesce(collection_id, '')), {int(self.n_buckets)}) AS INT)"
+
+    def _bucket_expr(self):
+        return F.expr(self._bucket_sql())
 
     def touched_buckets(self, touched_keys: DataFrame) -> list[int]:
         """Distinct cbucket values of a touched-keys frame — at most
@@ -166,11 +188,15 @@ class SilverStore:
         return True, bucketed
 
     def _empty(self, table: str) -> DataFrame:
-        schema = _SCHEMAS[table]
+        """The canonical empty table as an empty local relation (``LIMIT
+        0``): Catalyst prunes every join and union against it, so a merge
+        into a fresh table plans no scan of it and runs no job for it."""
+        fields = [(f.name, f.dataType.simpleString()) for f in _SCHEMAS[table].fields]
         if table == "token_transfers":
             # silver transfers carry the 1155 batch disambiguator
-            return self.spark.createDataFrame([], schema).withColumn("batch_index", F.lit(0).cast("int"))
-        return self.spark.createDataFrame([], schema)
+            fields.append(("batch_index", "int"))
+        cols = ", ".join(f"CAST(NULL AS {t}) AS `{n}`" for n, t in fields)
+        return self.spark.sql(f"SELECT {cols} LIMIT 0")
 
     def read(
         self,
@@ -197,18 +223,19 @@ class SilverStore:
             # a committed empty partitioned write has no data files at all
             # (partitionBy emits nothing for zero rows) → canonical empty
             return self._empty(table)
-        if blockchains is not None and "blockchain" in df.columns:
-            df = df.filter(F.col("blockchain").isin([str(b) for b in blockchains]))
-        if buckets is not None and "cbucket" in df.columns:
-            df = df.filter(F.col("cbucket").isin([int(b) for b in buckets]))
+        cols = df.columns
+        if blockchains is not None and "blockchain" in cols:
+            df = df.filter(_in_sql("blockchain", [sql_str(str(b)) for b in blockchains]))
+        if buckets is not None and "cbucket" in cols:
+            df = df.filter(_in_sql("cbucket", [str(int(b)) for b in buckets]))
         # normalize: partition discovery appends `blockchain` (and, on the
         # bucketed tables, `cbucket`) last and type-infers them; restore
         # declared column order, pin blockchain to string, drop the derived
         # bucket column (it is recomputed from collection_id on every write)
-        ordered = [f.name for f in _SCHEMAS[table].fields if f.name in df.columns]
-        extras = [c for c in df.columns if c not in ordered and c != "cbucket"]  # e.g. batch_index
-        return df.select(
-            *[F.col(c).cast("string").alias(c) if c == "blockchain" else F.col(c) for c in ordered + extras]
+        ordered = [f.name for f in _SCHEMAS[table].fields if f.name in cols]
+        extras = [c for c in cols if c not in ordered and c != "cbucket"]  # e.g. batch_index
+        return df.selectExpr(
+            *["CAST(blockchain AS STRING) AS blockchain" if c == "blockchain" else f"`{c}`" for c in ordered + extras]
         )
 
     def _read_for_merge(
@@ -299,9 +326,9 @@ class SilverStore:
         bucket_prune = prune and bucket_ok and touched_buckets is not None
         out = df
         if prune:
-            out = df.filter(F.col("blockchain").isin(list(touched_blockchains)))
+            out = df.filter(_in_sql("blockchain", [sql_str(str(b)) for b in touched_blockchains]))
             if bucket_prune:
-                out = out.filter(self._bucket_expr().isin([int(b) for b in touched_buckets]))
+                out = out.filter(_in_sql(self._bucket_sql(), [str(int(b)) for b in touched_buckets]))
         # The plan may read the current version's files; they stay in place
         # until after the pointer flip, so no lineage break is needed.
         part_cols = ["blockchain", "cbucket"] if bucketed else ["blockchain"]
@@ -363,7 +390,7 @@ class SilverStore:
 
     def rebuild_tokens(
         self,
-        batch_tokens: DataFrame,
+        batch_meta: DataFrame,
         touched_keys: DataFrame,
         blockchains: Sequence[str] | None = None,
         buckets: Sequence[int] | None = None,
@@ -374,69 +401,30 @@ class SilverStore:
         A retried batch — or a bulk crawl re-run over the same bronze —
         rewrites the same values instead of re-adding additive quantities.
 
-        Transfer-derived fields come from
-        ``folds.token_state_from_silver``; ``specification`` (an ERC-165
-        probe result, constant per token) and the ``metadata_url`` pair (K3
-        LWW on (data_version, metadata_url_version_hex)) are merged from
-        existing ∪ batch rows, since they are not functions of the transfer
-        stream.
+        ``folds.token_state_from_silver`` folds the touched keys' committed
+        transfers together with their metadata rows — the stored ones plus
+        ``batch_meta`` (keys, ``specification``, ``metadata_url``,
+        ``metadata_url_version_hex``, ``data_version``; any number of rows
+        per key — the crawl plan's ``SilverTables.token_meta``).
         """
         from ..operators.folds import token_state_from_silver
-        from ..schemas import SPEC_ERC721
 
         keys = ["blockchain", "collection_id", "token_id_hex"]
         existing = self._read_for_merge("tokens", blockchains, buckets)
         if "specification" not in existing.columns:
             existing = existing.withColumn("specification", F.lit(None).cast("string"))
         kept = existing.join(touched_keys, keys, "left_anti")
-
+        meta_cols = ["specification", "metadata_url", "metadata_url_version_hex", "data_version"]
+        meta = existing.join(touched_keys, keys, "left_semi").select(*keys, *meta_cols).unionByName(
+            batch_meta.select(*keys, *meta_cols)
+        )
         # ALWAYS safe to prune this scan (no capability gate): the fold
         # semi-joins against touched_keys, and every transfer of a touched
         # key lives in that key's blockchain partition and cbucket (a pure
         # function of collection_id) — on a pre-bucketed layout read()
         # simply skips the missing partition filter
-        recomputed = token_state_from_silver(
-            self.read("token_transfers", blockchains=blockchains, buckets=buckets), touched_keys
-        )
-        meta_cols = ["specification", "metadata_url", "metadata_url_version_hex", "data_version"]
-        meta_src = existing.join(touched_keys, keys, "left_semi").select(*keys, *meta_cols).unionByName(
-            batch_tokens.select(*keys, *meta_cols)
-        )
-        # K3 rule (merge.metadata_url_upsert): only rows that CARRY URI data
-        # compete — a NULL ordering key makes max_by skip the row, so a
-        # higher-data_version batch with no URI event can never clobber an
-        # existing metadata_url to NULL (round-4 review finding).  "Carries
-        # URI data" means EITHER field: the A4 backfill (fetch_token_uris)
-        # sets a URL with no version hex, and such a row must still compete
-        # (with an empty version) rather than be silently dropped.
-        carries_uri = F.col("metadata_url").isNotNull() | F.col("metadata_url_version_hex").isNotNull()
-        meta = meta_src.groupBy(*keys).agg(
-            F.max("specification").alias("specification"),
-            F.max_by(
-                F.struct("metadata_url", "metadata_url_version_hex"),
-                F.when(
-                    carries_uri,
-                    F.struct(
-                        F.col("data_version"),
-                        F.coalesce(F.col("metadata_url_version_hex"), F.lit("")),
-                    ),
-                ),
-            ).alias("_meta"),
-            F.max("data_version").alias("data_version"),
-        )
-        rebuilt = (
-            recomputed.join(meta, keys, "left")
-            .withColumn("metadata_url", F.col("_meta.metadata_url"))
-            .withColumn("metadata_url_version_hex", F.col("_meta.metadata_url_version_hex"))
-            .withColumn(
-                "current_owner",
-                F.when(F.col("specification") == SPEC_ERC721, F.col("_last_recipient")),
-            )
-            .withColumn(
-                "current_owner_version_hex",
-                F.when(F.col("specification") == SPEC_ERC721, F.col("_owner_version_hex")),
-            )
-            .drop("_meta", "_last_recipient", "_owner_version_hex")
+        rebuilt = token_state_from_silver(
+            self.read("token_transfers", blockchains=blockchains, buckets=buckets), meta, touched_keys
         )
         self.overwrite(
             "tokens",
@@ -460,28 +448,35 @@ class SilverStore:
            (task, stage, foreachBatch checkpoint recovery, full re-crawl)
            rewrites identical values.
 
-        ``silver`` is a ``plans.crawl.SilverTables``-shaped object; config
+        ``silver`` is a ``plans.crawl.SilverTables``-shaped object (its
+        ``token_transfers`` and ``token_meta`` are read); config
         (last_block_id) commits stay with the caller, AFTER this returns.
         """
         from ..operators.folds import owner_balances_from_silver
 
-        touched = silver.token_transfers.select(
-            "blockchain", "collection_id", "token_id_hex"
-        ).distinct()
-        # one tiny job (≤ n_buckets rows to the driver) turns every rewrite
-        # below from O(touched chain) into O(touched collection buckets)
-        buckets = self.touched_buckets(touched) if blockchains is not None else None
-        self.append_transfers(silver.token_transfers, blockchains=blockchains, buckets=buckets)
-        self.rebuild_tokens(silver.tokens, touched, blockchains=blockchains, buckets=buckets)
-        balances = owner_balances_from_silver(
-            self.read("token_transfers", blockchains=blockchains, buckets=buckets), touched
-        )
-        self.rebuild_owners(
-            balances.withColumn("data_version", F.lit(data_version)),
-            touched,
-            blockchains=blockchains,
-            buckets=buckets,
-        )
+        # the batch's touched keys, derived ONCE and cached: the bucket
+        # collect below materializes them, and every anti/semi join of the
+        # rebuilds reads that copy instead of re-running a distinct over the
+        # batch
+        touched = silver.token_transfers.select("blockchain", "collection_id", "token_id_hex").distinct().cache()
+        try:
+            # one tiny job (≤ n_buckets rows to the driver) turns every
+            # rewrite below from O(touched chain) into O(touched collection
+            # buckets)
+            buckets = self.touched_buckets(touched) if blockchains is not None else None
+            self.append_transfers(silver.token_transfers, blockchains=blockchains, buckets=buckets)
+            self.rebuild_tokens(silver.token_meta, touched, blockchains=blockchains, buckets=buckets)
+            balances = owner_balances_from_silver(
+                self.read("token_transfers", blockchains=blockchains, buckets=buckets), touched
+            )
+            self.rebuild_owners(
+                balances.withColumn("data_version", F.lit(data_version)),
+                touched,
+                blockchains=blockchains,
+                buckets=buckets,
+            )
+        finally:
+            touched.unpersist()
 
     def append_transfers(
         self,
@@ -607,6 +602,8 @@ class SilverStore:
     # -- control table (K12) -----------------------------------------------
     def get_config(self, blockchain: str) -> tuple[int, int | None]:
         """(data_version, last_block_id) — data_version starts at 1."""
+        if self._current_version("crawler_config") is None:
+            return 1, None  # nothing committed yet: answered without a Spark job
         # partition-level prune (blockchains=) + the row filter for the
         # pre-partitioned-layout case where blockchain is a data column
         rows = (
@@ -619,8 +616,12 @@ class SilverStore:
         return rows[0]["data_version"], rows[0]["last_block_id"]
 
     def set_config(self, blockchain: str, data_version: int, last_block_id: int | None) -> None:
-        updates = self.spark.createDataFrame(
-            [(blockchain, data_version, last_block_id)], CRAWLER_CONFIG_SCHEMA
+        # a literal row, not createDataFrame: scanning a Python-side RDD
+        # starts Python workers, ~2 s per call on a cold pool
+        last = "NULL" if last_block_id is None else int(last_block_id)
+        updates = self.spark.sql(
+            f"SELECT {sql_str(blockchain)} AS blockchain, CAST({int(data_version)} AS BIGINT) AS data_version, "
+            f"CAST({last} AS BIGINT) AS last_block_id"
         )
         existing = self.read("crawler_config").filter(F.col("blockchain") != blockchain)
         self.overwrite(

@@ -82,11 +82,11 @@ class TailRunner:
 
         logs = self.source.logs(start, target)
         blocks = self.source.blocks(start, target)
-        silver = crawl_plan(self.store.spark, logs, blocks, blockchain=self.blockchain, data_version=dv)
-
-        # the retry-safe sink sequence lives in ONE place — see its docstring
-        self.store.apply_silver(silver, dv, blockchains=[self.blockchain])
-        self.store.set_config(self.blockchain, dv, target)
+        # the batch's cached decode is released once the batch has committed
+        with crawl_plan(self.store.spark, logs, blocks, blockchain=self.blockchain, data_version=dv) as silver:
+            # the retry-safe sink sequence lives in ONE place — see its docstring
+            self.store.apply_silver(silver, dv, blockchains=[self.blockchain])
+            self.store.set_config(self.blockchain, dv, target)
         if self.stats is not None:
             # reference ticker fields (core/stats.py counters): committed
             # parquet row counts are metadata-cheap reads

@@ -172,12 +172,12 @@ def stream_tail(
         if batch_df.isEmpty():
             return
         dv, _last = store.get_config(blockchain)
-        silver = crawl_plan(store.spark, batch_df, blocks_df, blockchain=blockchain, data_version=dv)
-        # the retry-safe sink sequence lives in ONE place — see its docstring
-        store.apply_silver(silver, dv, blockchains=[blockchain])
-        top = batch_df.agg(F.max("block_number")).collect()[0][0]
-        _, last = store.get_config(blockchain)
-        store.set_config(blockchain, dv, max(top, last) if last is not None else top)
+        with crawl_plan(store.spark, batch_df, blocks_df, blockchain=blockchain, data_version=dv) as silver:
+            # the retry-safe sink sequence lives in ONE place — see its docstring
+            store.apply_silver(silver, dv, blockchains=[blockchain])
+            top = batch_df.agg(F.max("block_number")).collect()[0][0]
+            _, last = store.get_config(blockchain)
+            store.set_config(blockchain, dv, max(top, last) if last is not None else top)
 
     writer = (
         logs_stream.writeStream.foreachBatch(process)

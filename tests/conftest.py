@@ -37,6 +37,7 @@ _SLOW_NODE_IDS = {
     "tests/test_audit_ops.py::test_pair_pagerank_hub_outranks_leaves",
     "tests/test_audit_ops.py::test_power_iteration_finds_planted_dominant_axis",
     "tests/test_audit_ops.py::test_semantic_cells_exact_recall_characterization",
+    "tests/test_batch_cost.py::test_tail_batches_leave_no_cached_frames",
     "tests/test_bucketing.py::test_bucketed_join_has_no_shuffle",
     "tests/test_cli_curate.py::test_curate_mixture_sampling_is_a_valid_alternative",
     "tests/test_cli_curate.py::test_curate_writes_shards_and_consistent_manifest",

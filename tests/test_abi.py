@@ -44,3 +44,31 @@ def test_decode_string(spark):
         data = enc_string(s)
         got = spark.range(1).select(decode_string(F.lit(data), 0).alias("s")).collect()[0]["s"]
         assert got == s
+
+
+def test_empty_uint256_array_is_an_empty_array(spark):
+    data = enc_uint_array_pair([], [])
+    row = spark.range(1).select(
+        decode_uint256_array(F.lit(data), 0).alias("ids"),
+        decode_uint256_array("'" + data + "'", 1).alias("vals"),
+    ).collect()[0]
+    assert row["ids"] == [] and row["vals"] == []
+
+
+def test_decode_string_multibyte_utf8(spark):
+    """Lengths are in bytes: multibyte characters must survive intact."""
+    texts = ["héllo wörld", "日本語のURI/{id}", "🦄" * 20, "ä" * 33, "mixed ascii + ü + 中 + 🦄"]
+    df = spark.createDataFrame([(i, enc_string(s)) for i, s in enumerate(texts)], "i int, data string")
+    got = {r["i"]: r["s"] for r in df.select("i", decode_string(F.col("data"), 0).alias("s")).collect()}
+    assert [got[i] for i in range(len(texts))] == texts
+
+
+def test_word_with_a_column_slot(spark):
+    data = "0x" + enc_uint(7) + enc_uint(9) + enc_uint(1 << 100)
+    df = spark.createDataFrame([(data, 2)], "data string, slot long")
+    row = df.select(
+        word(F.col("data"), F.col("slot") - 1).alias("w"),
+        word_uint("data", "slot").alias("u"),
+    ).collect()[0]
+    assert row["w"] == enc_uint(9)
+    assert row["u"] == Decimal(1 << 100)

@@ -254,7 +254,7 @@ def test_apply_silver_bucket_prunes_all_three_tables(spark, tmp_path):
             "blockchain string, collection_id string, token_id_hex string, specification string, "
             "metadata_url string, metadata_url_version_hex string, data_version long",
         )
-        return SimpleNamespace(token_transfers=tr, tokens=toks)
+        return SimpleNamespace(token_transfers=tr, token_meta=toks)
 
     store.apply_silver(silver_for(col_x), 1, blockchains=["chain-a"])
     store.apply_silver(silver_for(col_y), 1, blockchains=["chain-a"])
@@ -386,7 +386,7 @@ def test_apply_silver_results_identical_with_and_without_read_pruning(spark, tmp
             "blockchain string, collection_id string, token_id_hex string, specification string, "
             "metadata_url string, metadata_url_version_hex string, data_version long",
         )
-        return SimpleNamespace(token_transfers=tr, tokens=toks)
+        return SimpleNamespace(token_transfers=tr, token_meta=toks)
 
     pruned_store = SilverStore(spark, str(tmp_path / "pruned"))
     full_store = SilverStore(spark, str(tmp_path / "full"))
