@@ -21,22 +21,26 @@ collections, so steady-state merge cost is bounded by batch size, not
 corpus size.  Untouched ``blockchain=X`` trees and untouched
 ``cbucket=K`` subtrees are hard-linked file-by-file from the previous
 version into the new one (same inode — zero data movement, byte-identical;
-on an object store this becomes a metadata copy).  A store created before
-the bucketed layout migrates transparently: the first pruned merge over a
-non-bucketed version rewrites that table fully into the new layout, and
-every later merge prunes.
+on an object store this becomes a metadata copy).
 
-The READ side is bounded the same way (round 7 — this was the last
-O(history) step in the tail path): :meth:`read` takes optional
-``blockchains=``/``buckets=`` filters applied to the partition columns
-BEFORE normalization drops them, so Spark statically prunes the scan
-(``PartitionFilters`` on ``blockchain`` and ``cbucket``).  The rebuild
-scans (token/owner state recomputed from committed transfers) always prune
-— they semi-join against the batch's touched keys, every transfer of a
-touched key lives in that key's partitions; the existing-side merge reads
-prune via :meth:`_read_for_merge` only when the same layout probe says the
-write will prune too.  Steady-state tail cost is therefore O(touched
-collection buckets) for reads AND writes.
+Every table has ONE declared stored schema (:data:`STORED_SCHEMAS`) and one
+layout.  :meth:`overwrite` projects each write onto that schema and
+:meth:`read` scans each committed version with it (``spark.read.schema``),
+so a read never runs a schema-inference job and writes and reads agree by
+construction.  ``read``'s optional ``blockchains=``/``buckets=`` filters
+land on the partition columns, so Spark statically prunes the scan
+(``PartitionFilters`` on ``blockchain`` and ``cbucket``).  Every merge reads
+the existing side with the same pruning its rewrite uses — untouched
+partitions hard-link, so their rows never need computing — and the
+rebuild scans (token/owner state recomputed from committed transfers)
+prune the same way: they semi-join against the batch's touched keys, and
+every transfer of a touched key lives in that key's partitions.
+Steady-state tail cost is therefore O(touched collection buckets) for
+reads AND writes.  A current version that is not in this layout (bare
+part files, or ``blockchain=`` trees without ``cbucket=`` subtrees on a
+bucketed table) is rejected with an error when it is resolved, by reads
+and writes alike: reading it with the declared partition columns would
+miss rows, and a pruned rewrite over it would drop them.
 
 Per-batch materialization (:meth:`apply_silver`): the batch's touched
 token keys are derived ONCE and cached — the touched-buckets collect
@@ -73,7 +77,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..functions.sqlexpr import sql_str
 from ..operators import merge as M
@@ -85,10 +89,14 @@ from ..schemas import (
     TOKEN_TRANSFER_SCHEMA,
 )
 
-_SCHEMAS = {
+# The stored columns of every table, in read order: the entity schemas, plus
+# the tokens' probe-derived specification and the transfers' ERC-1155 batch
+# disambiguator.  Every write is projected onto these and every read scans
+# with them.
+STORED_SCHEMAS = {
     "collections": COLLECTION_SCHEMA,
-    "tokens": TOKEN_SCHEMA,
-    "token_transfers": TOKEN_TRANSFER_SCHEMA,
+    "tokens": StructType([*TOKEN_SCHEMA.fields, StructField("specification", StringType(), True)]),
+    "token_transfers": StructType([*TOKEN_TRANSFER_SCHEMA.fields, StructField("batch_index", IntegerType(), True)]),
     "owners": OWNER_SCHEMA,
     "crawler_config": CRAWLER_CONFIG_SCHEMA,
 }
@@ -139,63 +147,36 @@ class SilverStore:
         )
 
     def _current_version(self, table: str) -> str | None:
+        """The committed version's directory name (None before the first
+        commit).  Raises when that version is not in the store's layout —
+        bare part files, or ``blockchain=`` trees without ``cbucket=``
+        subtrees on a bucketed table: a read with the declared partition
+        columns would miss its rows, and a pruned rewrite would drop them."""
         ptr = os.path.join(self._path(table), "_CURRENT")
         try:
             with open(ptr) as f:
                 v = f.read().strip()
-            return v or None
         except OSError:
             return None
-
-    def _prune_capability(self, table: str) -> tuple[bool, bool]:
-        """(blockchain_prunable, bucket_prunable) of the CURRENT version —
-        the single layout probe shared by :meth:`overwrite`'s write pruning
-        and the merge paths' read pruning, so an existing-side read never
-        prunes unless the write that follows prunes identically (a
-        migration full-rewrite fed by a pruned read would drop the
-        unscanned partitions' rows).
-
-        * no current version → (False, False) — nothing to prune;
-        * current version has bare ``*.parquet`` files (pre-partitioned
-          layout) → (False, False) — its rows carry no partition dirs, a
-          pruned rewrite would silently lose them;
-        * bucketed table whose ``blockchain=X`` trees lack ``cbucket=``
-          subtrees (pre-bucketed layout) → (False, False) — mixed directory
-          depths would break partition discovery, so overwrite rewrites
-          fully once;
-        * otherwise (partitioned, and bucketed where applicable, or a
-          committed empty table) → prunable.
-        """
-        cur = self._current_version(table)
-        if cur is None:
-            return False, False
-        cur_path = os.path.join(self._path(table), cur)
-        try:
-            entries = os.listdir(cur_path)
-        except OSError:
-            return False, False
-        part_dirs = [d for d in entries if d.startswith("blockchain=")]
-        if not part_dirs and any(n.endswith(".parquet") for n in entries):
-            return False, False
-        bucketed = table in _BUCKETED
-        if bucketed and part_dirs:
-            cur_is_bucketed = all(
-                any(s.startswith("cbucket=") for s in os.listdir(os.path.join(cur_path, d)))
-                for d in part_dirs
-            )
-            if not cur_is_bucketed:
-                return False, False
-        return True, bucketed
+        if not v:
+            return None
+        path = os.path.join(self._path(table), v)
+        entries = os.listdir(path)
+        trees = [os.path.join(path, d) for d in entries if d.startswith("blockchain=")]
+        if any(n.endswith(".parquet") for n in entries) or (
+            table in _BUCKETED
+            and not all(any(s.startswith("cbucket=") for s in os.listdir(t)) for t in trees)
+        ):
+            raise RuntimeError(f"{path}: version is not in the silver store's partitioned layout")
+        return v
 
     def _empty(self, table: str) -> DataFrame:
         """The canonical empty table as an empty local relation (``LIMIT
         0``): Catalyst prunes every join and union against it, so a merge
         into a fresh table plans no scan of it and runs no job for it."""
-        fields = [(f.name, f.dataType.simpleString()) for f in _SCHEMAS[table].fields]
-        if table == "token_transfers":
-            # silver transfers carry the 1155 batch disambiguator
-            fields.append(("batch_index", "int"))
-        cols = ", ".join(f"CAST(NULL AS {t}) AS `{n}`" for n, t in fields)
+        cols = ", ".join(
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`" for f in STORED_SCHEMAS[table].fields
+        )
         return self.spark.sql(f"SELECT {cols} LIMIT 0")
 
     def read(
@@ -204,58 +185,33 @@ class SilverStore:
         blockchains: Sequence[str] | None = None,
         buckets: Sequence[int] | None = None,
     ) -> DataFrame:
-        """Scan the current version.  ``blockchains``/``buckets`` filter on
-        the PARTITION columns before normalization drops them, so Spark
-        statically prunes the scan to the named ``blockchain=X`` /
+        """Scan the current version with the declared schema (no inference
+        job).  ``blockchains``/``buckets`` filter on the PARTITION columns,
+        so Spark statically prunes the scan to the named ``blockchain=X`` /
         ``cbucket=K`` trees (``PartitionFilters`` in the plan) — the read
         half of the O(touched) merge story (the write half is
         :meth:`overwrite`'s hard-link pruning).  Callers that prune must
         guarantee the filter is semantically safe: either the consumer
         filters to keys inside those partitions anyway (the rebuilds'
-        semi-joins against touched keys), or the dropped rows would be
-        hard-linked rather than rewritten (:meth:`_read_for_merge`)."""
+        semi-joins against touched keys), or the dropped rows are
+        hard-linked rather than rewritten (a merge's existing side, read
+        with the pruning its overwrite uses).  ``buckets`` applies to the
+        bucketed tables only."""
         cur = self._current_version(table)
         if cur is None:
             return self._empty(table)
-        try:
-            df = self.spark.read.parquet(os.path.join(self._path(table), cur))
-        except AnalysisException:
-            # a committed empty partitioned write has no data files at all
-            # (partitionBy emits nothing for zero rows) → canonical empty
-            return self._empty(table)
-        cols = df.columns
-        if blockchains is not None and "blockchain" in cols:
+        schema = STORED_SCHEMAS[table]
+        if table in _BUCKETED:
+            # declared rather than discovered, so the bucket filter resolves
+            # on a committed empty version too (partitionBy writes no
+            # directories for zero rows)
+            schema = StructType([*schema.fields, StructField("cbucket", IntegerType(), True)])
+        df = self.spark.read.schema(schema).parquet(os.path.join(self._path(table), cur))
+        if blockchains is not None:
             df = df.filter(_in_sql("blockchain", [sql_str(str(b)) for b in blockchains]))
-        if buckets is not None and "cbucket" in cols:
+        if buckets is not None:
             df = df.filter(_in_sql("cbucket", [str(int(b)) for b in buckets]))
-        # normalize: partition discovery appends `blockchain` (and, on the
-        # bucketed tables, `cbucket`) last and type-infers them; restore
-        # declared column order, pin blockchain to string, drop the derived
-        # bucket column (it is recomputed from collection_id on every write)
-        ordered = [f.name for f in _SCHEMAS[table].fields if f.name in cols]
-        extras = [c for c in cols if c not in ordered and c != "cbucket"]  # e.g. batch_index
-        return df.selectExpr(
-            *["CAST(blockchain AS STRING) AS blockchain" if c == "blockchain" else f"`{c}`" for c in ordered + extras]
-        )
-
-    def _read_for_merge(
-        self,
-        table: str,
-        blockchains: Sequence[str] | None,
-        buckets: Sequence[int] | None,
-    ) -> DataFrame:
-        """Existing-side read for a merge: pruned to the touched partitions
-        exactly when the overwrite that follows will prune them (untouched
-        partitions hard-link, so their rows never need computing); a full
-        scan otherwise (first write, or a layout-migration full rewrite,
-        where every existing row must flow into the new version)."""
-        prune_ok, bucket_ok = self._prune_capability(table)
-        prune = blockchains is not None and prune_ok
-        return self.read(
-            table,
-            blockchains=blockchains if prune else None,
-            buckets=buckets if (prune and bucket_ok and buckets is not None) else None,
-        )
+        return df.select(*STORED_SCHEMAS[table].names)
 
     @staticmethod
     def _link_tree(src: str, dst: str) -> None:
@@ -292,11 +248,8 @@ class SilverStore:
         level deeper: within a touched blockchain only the touched
         ``cbucket=K`` subtrees are rewritten, the rest hard-link.  A touched
         partition that ends the merge with zero rows has its directory
-        dropped — correct delete semantics.  ``None`` (or a current version
-        predating the partitioned layout) rewrites fully; a current version
-        predating the BUCKETED layout triggers a one-time full rewrite of
-        the touched table into the new layout (mixed directory depths would
-        break partition discovery).
+        dropped — correct delete semantics.  ``None`` rewrites fully.  Every
+        write is projected (and cast) onto the table's declared schema.
 
         Retention is one commit deep: ``v-N`` (the version current until
         this flip) survives until the NEXT overwrite, so a concurrent
@@ -311,34 +264,28 @@ class SilverStore:
         os.makedirs(base, exist_ok=True)
         cur = self._current_version(table)
         nxt = f"v-{(int(cur.split('-')[1]) if cur else 0) + 1}"
-        cur_path = os.path.join(base, cur) if cur else None
-        # a pre-partitioned-layout version has bare part files → must rewrite
-        # fully or its unpartitioned rows would be silently dropped
-        cur_partition_dirs = (
-            [d for d in os.listdir(cur_path) if d.startswith("blockchain=")] if cur_path else []
-        )
-        # ONE layout probe decides both write pruning here and read pruning
-        # in _read_for_merge — they must never diverge (a pruned read feeding
-        # a full rewrite would drop the unscanned partitions' rows)
-        prune_ok, bucket_ok = self._prune_capability(table)
-        prune = touched_blockchains is not None and prune_ok
         bucketed = table in _BUCKETED
-        bucket_prune = prune and bucket_ok and touched_buckets is not None
-        out = df
-        if prune:
-            out = df.filter(_in_sql("blockchain", [sql_str(str(b)) for b in touched_blockchains]))
-            if bucket_prune:
-                out = out.filter(_in_sql(self._bucket_sql(), [str(int(b)) for b in touched_buckets]))
-        # The plan may read the current version's files; they stay in place
-        # until after the pointer flip, so no lineage break is needed.
+        prune = touched_blockchains is not None
+        bucket_prune = prune and bucketed and touched_buckets is not None
+        cols = [f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`" for f in STORED_SCHEMAS[table].fields]
         part_cols = ["blockchain", "cbucket"] if bucketed else ["blockchain"]
         if bucketed:
-            out = out.withColumn("cbucket", self._bucket_expr())
-        out.write.mode("overwrite").partitionBy(*part_cols).parquet(os.path.join(base, nxt))
+            cols.append(f"{self._bucket_sql()} AS cbucket")
+        out = df.selectExpr(*cols)
         if prune:
+            out = out.filter(_in_sql("blockchain", [sql_str(str(b)) for b in touched_blockchains]))
+            if bucket_prune:
+                out = out.filter(_in_sql("cbucket", [str(int(b)) for b in touched_buckets]))
+        # The plan may read the current version's files; they stay in place
+        # until after the pointer flip, so no lineage break is needed.
+        out.write.mode("overwrite").partitionBy(*part_cols).parquet(os.path.join(base, nxt))
+        if prune and cur is not None:
+            cur_path = os.path.join(base, cur)
             touched = set(touched_blockchains)
             tb = {int(b) for b in touched_buckets} if bucket_prune else None
-            for d in cur_partition_dirs:
+            for d in os.listdir(cur_path):
+                if not d.startswith("blockchain="):
+                    continue
                 if unquote(d.split("=", 1)[1]) not in touched:
                     self._link_tree(os.path.join(cur_path, d), os.path.join(base, nxt, d))
                 elif tb is not None:
@@ -360,32 +307,9 @@ class SilverStore:
         self.overwrite(
             "collections",
             M.versioned_upsert(
-                self._read_for_merge("collections", blockchains, None), updates, KEYS["collections"]
+                self.read("collections", blockchains=blockchains), updates, KEYS["collections"]
             ),
             touched_blockchains=blockchains,
-        )
-
-    def upsert_tokens(
-        self,
-        updates: DataFrame,
-        blockchains: Sequence[str] | None = None,
-        buckets: Sequence[int] | None = None,
-    ) -> None:
-        """Per-field merge (K2+K3+K4+K5) — see ``merge.token_state_merge``.
-
-        NOT retry-safe: the K4 additive quantity double-counts if the same
-        batch is applied twice.  The crawl/tail paths use
-        :meth:`rebuild_tokens` instead; this remains the field-merge API pin
-        for callers that guarantee exactly-once batch delivery.
-        """
-        existing = self._read_for_merge("tokens", blockchains, buckets)
-        if "specification" not in existing.columns:
-            existing = existing.withColumn("specification", F.lit(None).cast("string"))
-        self.overwrite(
-            "tokens",
-            M.token_state_merge(existing, updates),
-            touched_blockchains=blockchains,
-            touched_buckets=buckets,
         )
 
     def rebuild_tokens(
@@ -410,19 +334,16 @@ class SilverStore:
         from ..operators.folds import token_state_from_silver
 
         keys = ["blockchain", "collection_id", "token_id_hex"]
-        existing = self._read_for_merge("tokens", blockchains, buckets)
-        if "specification" not in existing.columns:
-            existing = existing.withColumn("specification", F.lit(None).cast("string"))
+        existing = self.read("tokens", blockchains=blockchains, buckets=buckets)
         kept = existing.join(touched_keys, keys, "left_anti")
         meta_cols = ["specification", "metadata_url", "metadata_url_version_hex", "data_version"]
         meta = existing.join(touched_keys, keys, "left_semi").select(*keys, *meta_cols).unionByName(
             batch_meta.select(*keys, *meta_cols)
         )
-        # ALWAYS safe to prune this scan (no capability gate): the fold
-        # semi-joins against touched_keys, and every transfer of a touched
-        # key lives in that key's blockchain partition and cbucket (a pure
-        # function of collection_id) — on a pre-bucketed layout read()
-        # simply skips the missing partition filter
+        # safe to prune this scan: the fold semi-joins against
+        # touched_keys, and every transfer of a touched key lives in that
+        # key's blockchain partition and cbucket (a pure function of
+        # collection_id)
         rebuilt = token_state_from_silver(
             self.read("token_transfers", blockchains=blockchains, buckets=buckets), meta, touched_keys
         )
@@ -487,34 +408,9 @@ class SilverStore:
         self.overwrite(
             "token_transfers",
             M.idempotent_append(
-                self._read_for_merge("token_transfers", blockchains, buckets),
+                self.read("token_transfers", blockchains=blockchains, buckets=buckets),
                 updates,
                 KEYS["token_transfers"],
-            ),
-            touched_blockchains=blockchains,
-            touched_buckets=buckets,
-        )
-
-    def merge_owner_deltas(
-        self,
-        deltas: DataFrame,
-        blockchains: Sequence[str] | None = None,
-        buckets: Sequence[int] | None = None,
-    ) -> None:
-        """K7/K8: additive balance merge, zero balances dropped.
-
-        NOT retry-safe on its own: re-applying the same batch of deltas
-        double-counts (ADVICE r1).  The crawl/tail paths use
-        :meth:`rebuild_owners` instead; this remains the K7 additive-merge
-        API pin for callers that guarantee exactly-once delta delivery.
-        """
-        self.overwrite(
-            "owners",
-            M.additive_upsert(
-                self._read_for_merge("owners", blockchains, buckets),
-                deltas,
-                KEYS["owners"],
-                drop_zero=True,
             ),
             touched_blockchains=blockchains,
             touched_buckets=buckets,
@@ -531,7 +427,7 @@ class SilverStore:
         owner row of the touched token keys with balances recomputed from the
         idempotent ``token_transfers`` table.  A retried batch rewrites the
         same values instead of re-adding deltas."""
-        existing = self._read_for_merge("owners", blockchains, buckets)
+        existing = self.read("owners", blockchains=blockchains, buckets=buckets)
         kept = existing.join(touched_keys, ["blockchain", "collection_id", "token_id_hex"], "left_anti")
         self.overwrite(
             "owners",
@@ -560,30 +456,19 @@ class SilverStore:
         resumes at the fork point.
         """
         keys = ["blockchain", "collection_id", "token_id_hex"]
-        # kept must retain other blockchains' rows iff the overwrite below
-        # will NOT hard-link them — the shared capability probe decides both
-        transfers = self._read_for_merge("token_transfers", [blockchain], None)
-        mine = F.col("blockchain") == blockchain
-        touched = transfers.filter(mine & (F.col("block_id") > to_block)).select(*keys).distinct()
+        # other blockchains' trees hard-link in the overwrite below, so only
+        # this chain's transfers are read
+        transfers = self.read("token_transfers", blockchains=[blockchain])
+        touched = transfers.filter(F.col("block_id") > to_block).select(*keys).distinct()
         # collect the touched buckets BEFORE the transfers overwrite: every
         # row the rewind drops or rebuilds belongs to a touched key, so
         # untouched buckets stay linkable
         buckets = self.touched_buckets(touched)
-        kept = transfers.filter(~mine | (F.col("block_id") <= to_block))
+        kept = transfers.filter(F.col("block_id") <= to_block)
         self.overwrite("token_transfers", kept, touched_blockchains=[blockchain], touched_buckets=buckets)
         # `touched` still scans the pre-rewind version's files — the
         # one-commit retention window exists exactly for handles like this
-        existing_tokens = self.read("tokens")
-        if "specification" not in existing_tokens.columns:
-            # the canonical empty table (fresh store / reset) lacks the
-            # probe-derived column, same guard rebuild_tokens applies
-            existing_tokens = existing_tokens.withColumn(
-                "specification", F.lit(None).cast("string")
-            )
-        no_batch = existing_tokens.select(
-            *keys, "specification", "metadata_url", "metadata_url_version_hex", "data_version"
-        ).limit(0)
-        self.rebuild_tokens(no_batch, touched, blockchains=[blockchain], buckets=buckets)
+        self.rebuild_tokens(self._empty("tokens"), touched, blockchains=[blockchain], buckets=buckets)
         from ..operators.folds import owner_balances_from_silver
 
         dv, last = self.get_config(blockchain)
@@ -604,13 +489,7 @@ class SilverStore:
         """(data_version, last_block_id) — data_version starts at 1."""
         if self._current_version("crawler_config") is None:
             return 1, None  # nothing committed yet: answered without a Spark job
-        # partition-level prune (blockchains=) + the row filter for the
-        # pre-partitioned-layout case where blockchain is a data column
-        rows = (
-            self.read("crawler_config", blockchains=[blockchain])
-            .filter(F.col("blockchain") == blockchain)
-            .collect()
-        )
+        rows = self.read("crawler_config", blockchains=[blockchain]).collect()
         if not rows:
             return 1, None
         return rows[0]["data_version"], rows[0]["last_block_id"]
@@ -623,12 +502,8 @@ class SilverStore:
             f"SELECT {sql_str(blockchain)} AS blockchain, CAST({int(data_version)} AS BIGINT) AS data_version, "
             f"CAST({last} AS BIGINT) AS last_block_id"
         )
-        existing = self.read("crawler_config").filter(F.col("blockchain") != blockchain)
-        self.overwrite(
-            "crawler_config",
-            existing.unionByName(updates),
-            touched_blockchains=[blockchain],
-        )
+        # every other blockchain's tree hard-links into the new version
+        self.overwrite("crawler_config", updates, touched_blockchains=[blockchain])
 
     def increment_data_version(self, blockchain: str) -> int:
         """Atomic-enough for a single-writer driver: the reference's

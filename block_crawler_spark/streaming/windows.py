@@ -171,12 +171,13 @@ def stream_tail(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        dv, _last = store.get_config(blockchain)
+        # apply_silver never writes crawler_config, so this read's `last`
+        # still holds when the batch commits below
+        dv, last = store.get_config(blockchain)
         with crawl_plan(store.spark, batch_df, blocks_df, blockchain=blockchain, data_version=dv) as silver:
             # the retry-safe sink sequence lives in ONE place — see its docstring
             store.apply_silver(silver, dv, blockchains=[blockchain])
             top = batch_df.agg(F.max("block_number")).collect()[0][0]
-            _, last = store.get_config(blockchain)
             store.set_config(blockchain, dv, max(top, last) if last is not None else top)
 
     writer = (

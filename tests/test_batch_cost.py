@@ -8,10 +8,16 @@ release.  The checks below are deterministic counts, not timings.
 
 from __future__ import annotations
 
+import os
+from types import SimpleNamespace
+
+import pytest
+from pyspark.sql.types import IntegerType, StringType
+
 from block_crawler_spark.plans.crawl import crawl_plan
-from block_crawler_spark.schemas import LOG_SCHEMA
+from block_crawler_spark.schemas import COLLECTION_SCHEMA, LOG_SCHEMA, TOKEN_TRANSFER_SCHEMA
 from block_crawler_spark.sources.chainfix import standard_scenario
-from block_crawler_spark.streaming.store import SilverStore
+from block_crawler_spark.streaming.store import _BUCKETED, STORED_SCHEMAS, SilverStore
 from block_crawler_spark.streaming.tail import TableChainSource, TailRunner
 
 _BLOCKS_DDL = (
@@ -52,6 +58,57 @@ def test_get_config_on_a_fresh_store_runs_no_job(spark, tmp_path):
     before = set(tracker.getJobIdsForGroup(None))
     assert store.get_config("testnet") == (1, None)
     assert not set(tracker.getJobIdsForGroup(None)) - before, "get_config ran a Spark job"
+
+
+def _jobs_run_by(spark, fn):
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    fn()
+    return set(tracker.getJobIdsForGroup(None)) - before
+
+
+@pytest.fixture(scope="module")
+def committed_store(spark, tmp_path_factory):
+    """A store with a committed version of all five tables: two stubbed
+    apply_silver batches (two collections, two tokens), one collections
+    upsert and one config commit."""
+    store = SilverStore(spark, str(tmp_path_factory.mktemp("committed") / "silver"))
+    for n, collection in enumerate(["0xc1", "0xc2"], start=1):
+        transfers = spark.createDataFrame(
+            [("testnet", collection, f"{n:040x}", "0x" + "07".rjust(64, "0"), 1_600_000_000, n, "0xabc",
+              0, 0, "mint", "0x" + "0" * 40, "0xowner", "0x" + "1".rjust(64, "0"), 1)],
+            TOKEN_TRANSFER_SCHEMA,
+        ).selectExpr("*", "0 AS batch_index")
+        meta = spark.createDataFrame(
+            [("testnet", collection, "0x" + "07".rjust(64, "0"), "ERC-721", None, None, 1)],
+            "blockchain string, collection_id string, token_id_hex string, specification string, "
+            "metadata_url string, metadata_url_version_hex string, data_version long",
+        )
+        store.apply_silver(SimpleNamespace(token_transfers=transfers, token_meta=meta), 1, blockchains=["testnet"])
+    collection = ("testnet", "0xc1", None, None, "n", "n", "N", None, "ERC-721", 1, 1_600_000_000, 1)
+    store.upsert_collections(spark.createDataFrame([collection], COLLECTION_SCHEMA), blockchains=["testnet"])
+    store.set_config("testnet", 1, 2)
+    return store
+
+
+def test_reading_a_committed_table_runs_no_job(spark, committed_store):
+    """The store declares every table's schema, so a read plans its scan
+    without a schema-inference job."""
+    for table in STORED_SCHEMAS:
+        assert committed_store._current_version(table) is not None, table
+        assert not _jobs_run_by(spark, lambda: committed_store.read(table)), f"read({table!r}) ran a Spark job"
+
+
+def test_committed_parquet_schema_is_the_declared_schema(spark, committed_store):
+    """Every write is projected onto the declared schema: the files of each
+    committed version hold exactly the declared columns and types, with the
+    partition columns as directories."""
+    for table, declared in STORED_SCHEMAS.items():
+        path = os.path.join(committed_store._path(table), committed_store._current_version(table))
+        on_disk = [(f.name, f.dataType) for f in spark.read.parquet(path).schema.fields]
+        partitions = [("blockchain", StringType())] + ([("cbucket", IntegerType())] if table in _BUCKETED else [])
+        want = [(f.name, f.dataType) for f in declared.fields if f.name != "blockchain"] + partitions
+        assert on_disk == want, table
 
 
 def test_tail_batches_leave_no_cached_frames(spark, tmp_path):

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from block_crawler_spark.streaming.store import SilverStore
@@ -98,9 +99,13 @@ def _transfers(spark, rows):
 
 def _partition_files(base_dir, cur, part):
     """{relative path: sha256} of every file under <base>/<cur>/blockchain=<part>."""
+    return _file_hashes(os.path.join(base_dir, cur, f"blockchain={part}"))
+
+
+def _file_hashes(root):
+    """{relative path: sha256} of every file under ``root``."""
     import hashlib
 
-    root = os.path.join(base_dir, cur, f"blockchain={part}")
     out = {}
     for r, _d, files in os.walk(root):
         for n in files:
@@ -132,26 +137,34 @@ def test_partition_pruned_merge_leaves_untouched_blockchain_byte_identical(spark
     assert got.filter(F.col("blockchain") == "chain-b").count() == 1
 
 
-def test_pruned_overwrite_falls_back_on_legacy_unpartitioned_version(spark, tmp_path):
-    """A current version written before the partitioned layout (bare part
-    files) must trigger a FULL rewrite — pruning against it would drop the
-    other chains' rows silently."""
+@pytest.mark.parametrize("partition_by", [[], ["blockchain"]], ids=["bare_parquet", "blockchain_only"])
+def test_version_outside_the_layout_is_rejected(spark, tmp_path, partition_by):
+    """A current version not in the store's layout — bare part files, or a
+    bucketed table partitioned by blockchain only — fails reads and writes
+    loudly: nothing is migrated or partially read, ``_CURRENT`` still names
+    it and its files are untouched."""
     store = _mk(spark, tmp_path)
     df = _transfers(spark, [_transfer_row("chain-a"), _transfer_row("chain-b")])
-    # simulate the pre-round-5 layout: unpartitioned parquet + pointer
     base = store._path("token_transfers")
-    os.makedirs(base, exist_ok=True)
-    df.write.mode("overwrite").parquet(os.path.join(base, "v-1"))
+    v1 = os.path.join(base, "v-1")
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(v1)
     with open(os.path.join(base, "_CURRENT"), "w") as f:
         f.write("v-1")
+    before = _file_hashes(v1)
 
     upd = _transfers(spark, [_transfer_row("chain-a", owner="0xowner2")]).withColumn(
         "attribute_version_hex", F.lit("0x" + "2".rjust(64, "0"))
     )
-    store.append_transfers(upd, blockchains=["chain-a"])
-    got = store.read("token_transfers")
-    assert got.filter(F.col("blockchain") == "chain-b").count() == 1, "legacy rows must survive"
-    assert got.filter(F.col("blockchain") == "chain-a").count() == 2
+    with pytest.raises(RuntimeError, match="layout"):
+        store.read("token_transfers")
+    with pytest.raises(RuntimeError, match="layout"):
+        store.append_transfers(upd, blockchains=["chain-a"])
+    with pytest.raises(RuntimeError, match="layout"):
+        store.overwrite("token_transfers", upd, touched_blockchains=["chain-a"])
+    with open(os.path.join(base, "_CURRENT")) as f:
+        assert f.read().strip() == "v-1"
+    assert sorted(d for d in os.listdir(base) if d.startswith("v-")) == ["v-1"]
+    assert _file_hashes(v1) == before
 
 
 def _two_collections_in_distinct_buckets(store, spark):
@@ -205,37 +218,6 @@ def test_bucket_pruned_merge_leaves_untouched_bucket_hard_linked(spark, tmp_path
     assert "cbucket" not in got.columns
 
 
-def test_bucket_layout_migration_full_rewrite_once(spark, tmp_path):
-    """A current version partitioned by blockchain only (pre-bucket layout)
-    forces ONE full rewrite into the bucketed layout — mixed directory
-    depths would break partition discovery — after which merges prune."""
-    store = _mk(spark, tmp_path)
-    (col_x, b_x), (col_y, b_y) = _two_collections_in_distinct_buckets(store, spark)
-    df = _transfers(
-        spark, [_transfer_row("chain-a", collection=col_x), _transfer_row("chain-a", collection=col_y)]
-    )
-    base = store._path("token_transfers")
-    os.makedirs(base, exist_ok=True)
-    df.write.mode("overwrite").partitionBy("blockchain").parquet(os.path.join(base, "v-1"))
-    with open(os.path.join(base, "_CURRENT"), "w") as f:
-        f.write("v-1")
-
-    upd = _transfers(spark, [_transfer_row("chain-a", owner="0xowner2", collection=col_x)]).withColumn(
-        "attribute_version_hex", F.lit("0x" + "2".rjust(64, "0"))
-    )
-    store.append_transfers(upd, blockchains=["chain-a"], buckets=[b_x])
-    got = store.read("token_transfers")
-    assert got.count() == 3, "migration rewrite must keep every legacy row"
-    cur = store._current_version("token_transfers")
-    assert _bucket_inodes(base, cur, "chain-a", b_y), "migrated version must be bucket-partitioned"
-    # second merge: now bucket-pruned — col_y's bucket hard-links
-    before = _bucket_inodes(base, cur, "chain-a", b_y)
-    upd2 = upd.withColumn("attribute_version_hex", F.lit("0x" + "3".rjust(64, "0")))
-    store.append_transfers(upd2, blockchains=["chain-a"], buckets=[b_x])
-    after = _bucket_inodes(base, store._current_version("token_transfers"), "chain-a", b_y)
-    assert after == before
-
-
 def test_apply_silver_bucket_prunes_all_three_tables(spark, tmp_path):
     """The crawl/tail sink sequence derives touched buckets from the batch:
     a batch touching only col_x leaves col_y's bucket hard-linked in
@@ -279,6 +261,7 @@ def test_empty_partitioned_write_reads_back_empty(spark, tmp_path):
     got = store.read("token_transfers")
     assert got.count() == 0
     assert "batch_index" in got.columns
+    assert store.read("token_transfers", blockchains=["chain-a"], buckets=[0]).count() == 0
 
 
 def test_rebuild_tokens_keeps_metadata_across_epochs(spark, tmp_path):
@@ -315,9 +298,8 @@ def test_rebuild_tokens_keeps_metadata_across_epochs(spark, tmp_path):
 
 
 def test_read_prunes_partitions_statically(spark, tmp_path):
-    """read(blockchains=, buckets=) filters on the PARTITION columns before
-    normalization drops them, so the scan carries PartitionFilters on
-    blockchain AND cbucket — the tail path's per-batch token/owner rebuilds
+    """read(blockchains=, buckets=) filters on the PARTITION columns, so the
+    declared-schema scan carries PartitionFilters on blockchain AND cbucket — the tail path's per-batch token/owner rebuilds
     scan only touched subtrees, not the whole transfers history."""
     store = _mk(spark, tmp_path)
     (col_x, b_x), (col_y, b_y) = _two_collections_in_distinct_buckets(store, spark)
@@ -335,40 +317,6 @@ def test_read_prunes_partitions_statically(spark, tmp_path):
     rows = pruned.collect()
     assert {(r["blockchain"], r["collection_id"]) for r in rows} == {("chain-a", col_x)}
     assert "cbucket" not in pruned.columns
-
-
-def test_read_for_merge_gates_on_layout(spark, tmp_path):
-    """The existing-side read prunes exactly when the overwrite will prune:
-    on a legacy blockchain-only layout the read is FULL (the migration
-    rewrite must carry every row — a pruned read would drop the unscanned
-    partitions), and after migration the same call prunes."""
-    store = _mk(spark, tmp_path)
-    (col_x, b_x), (col_y, b_y) = _two_collections_in_distinct_buckets(store, spark)
-    df = _transfers(
-        spark,
-        [_transfer_row("chain-a", collection=col_x), _transfer_row("chain-b", collection=col_y)],
-    )
-    base = store._path("token_transfers")
-    os.makedirs(base, exist_ok=True)
-    df.write.mode("overwrite").partitionBy("blockchain").parquet(os.path.join(base, "v-1"))
-    with open(os.path.join(base, "_CURRENT"), "w") as f:
-        f.write("v-1")
-
-    # pre-bucket layout: capability denies pruning, read returns ALL rows
-    assert store._prune_capability("token_transfers") == (False, False)
-    full = store._read_for_merge("token_transfers", ["chain-a"], [b_x])
-    assert full.count() == 2
-
-    # a merge migrates the layout; the same read now prunes to the request
-    upd = _transfers(spark, [_transfer_row("chain-a", owner="0xo2", collection=col_x)]).withColumn(
-        "attribute_version_hex", F.lit("0x" + "2".rjust(64, "0"))
-    )
-    store.append_transfers(upd, blockchains=["chain-a"], buckets=[b_x])
-    assert store.read("token_transfers").count() == 3, "migration kept every legacy row"
-    assert store._prune_capability("token_transfers") == (True, True)
-    pruned = store._read_for_merge("token_transfers", ["chain-a"], [b_x])
-    got = {(r["blockchain"], r["collection_id"]) for r in pruned.collect()}
-    assert got == {("chain-a", col_x)}
 
 
 def test_apply_silver_results_identical_with_and_without_read_pruning(spark, tmp_path):
